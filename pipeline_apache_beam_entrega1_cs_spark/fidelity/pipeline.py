@@ -2,14 +2,15 @@
 (reference src/pipeline.py:279-296) as native Spark —
 
     read text glob -> json-object filter -> DeviceType filter ->
-    RaceID normalization -> broadcast country enrichment ->
-    KEEP projection -> JSONL sink
+    RaceID normalization -> country enrichment -> KEEP projection ->
+    JSONL sink
 
 Zero Python UDFs: every transform is a Catalyst expression, so the whole
 chain is ONE narrow stage under whole-stage codegen (the Spark analog of
-Beam DirectRunner's ParDo fusion), and the enrichment join is a broadcast
-hash join (the analog of the reference's pickled driver-dict lookup,
-reference src/pipeline.py:275,288).
+Beam DirectRunner's ParDo fusion). The country enrichment is a
+driver-built LUT applied as one literal lookup, as the reference applies
+its pickled driver dict (reference src/pipeline.py:270,275,288): one Spark
+job, no join, no exchange.
 
 Fidelity traps replicated (SURVEY.md §7 known-hard list):
 - missing/null DeviceType is KEPT (``str(None)``/"" != "Other");
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.strings import apply_country_alias, norm_country_key, standardize_race_id
 from ..schemas import FAN_ENGAGEMENT_SCHEMA, KEEP, LOCATION_FIELDS
-from ..sources.csv_tolerant import read_country_dim
+from ..sources.csv_tolerant import country_lut
 from ..sources.jsonl import read_jsonl_dicts
 
 
@@ -68,37 +69,40 @@ def standardize_race(df: DataFrame) -> DataFrame:
     )
 
 
-def enrich_with_country(df: DataFrame, country_dim: DataFrame) -> DataFrame:
-    """Broadcast left join against the country dimension + fallback struct
-    (reference src/pipeline.py:162-182). The fact-side key is normalized
-    then alias-rewritten BEFORE lookup (reference :170-171)."""
-    key = apply_country_alias(norm_country_key(F.col("ViewerLocationCountry")))
-    fact = df.withColumn("_ckey", key)
+def _sql_string(text: str) -> str:
+    """``text`` as an exact Spark SQL string literal under any parser
+    setting: its UTF-8 bytes in hex, cast back to a string."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
 
-    dim = country_dim.select(
-        F.col("key").alias("_dimkey"),
-        F.struct(*[F.col(f"`{f}`") for f in LOCATION_FIELDS]).alias("_loc"),
+
+def enrich_with_country(df: DataFrame, lut: dict[str, dict[str, str]]) -> DataFrame:
+    """Replace ``ViewerLocationCountry`` with the ``LocationData`` struct
+    (reference src/pipeline.py:162-182): the fact-side key is normalized
+    then alias-rewritten BEFORE lookup (reference :170-171); a miss, or an
+    empty ``lut``, gives the fallback struct.
+
+    ``lut`` is ``sources.csv_tolerant.country_lut``'s output and is inlined
+    into the plan as one literal map, so it must be what the reference's
+    is: a country table, small by construction (tens of rows)."""
+    raw = F.col("ViewerLocationCountry")
+    location = F.struct(
+        F.trim(F.coalesce(raw, F.lit(""))).alias("country"),
+        *[F.lit("").alias(f) for f in LOCATION_FIELDS[1:]],
     )
-
-    joined = fact.join(F.broadcast(dim), fact._ckey == dim._dimkey, "left")
-
-    fallback = F.struct(
-        F.trim(F.coalesce(F.col("ViewerLocationCountry"), F.lit(""))).alias("country"),
-        F.lit("").alias("capital"),
-        F.lit("").alias("continent"),
-        F.lit("").alias("official language"),
-        F.lit("").alias("currency"),
-    )
-    # The reference also falls back when the payload dict is falsy; a
-    # matched payload is never falsy here (struct of 5 strings), so
-    # isNull() is the exact condition.
-    return (
-        joined.withColumn(
-            "LocationData",
-            F.when(F.col("_dimkey").isNull(), fallback).otherwise(F.col("_loc")),
+    if lut:
+        # One SQL map literal, parsed in a single call: building it from
+        # F.lit Columns costs a py4j round trip per literal, ~0.3 s of every
+        # plan build for a 25-row LUT on 4 vCPU. Catalyst folds it to a Literal.
+        entries = ", ".join(
+            f"{_sql_string(key)}, named_struct("
+            + ", ".join(f"'{f}', {_sql_string(payload[f])}" for f in LOCATION_FIELDS) + ")"
+            for key, payload in lut.items()
         )
-        .drop("_ckey", "_dimkey", "_loc", "ViewerLocationCountry")
-    )
+        lut_map = F.expr(f"map({entries})")
+        # A matched payload is never falsy (5 strings), so the reference's
+        # ``lut.get(key) or fallback`` is exactly a null-coalesce.
+        location = F.coalesce(lut_map[apply_country_alias(norm_country_key(raw))], location)
+    return df.withColumn("LocationData", location).drop("ViewerLocationCountry")
 
 
 def project_output(df: DataFrame) -> DataFrame:
@@ -107,34 +111,26 @@ def project_output(df: DataFrame) -> DataFrame:
     return df.select(*KEEP)
 
 
-def _transforms(events: DataFrame, country_dim: DataFrame) -> DataFrame:
-    return project_output(
-        enrich_with_country(standardize_race(filter_device_other(events)), country_dim)
-    )
+def _transforms(events: DataFrame, lut: dict[str, dict[str, str]]) -> DataFrame:
+    return project_output(enrich_with_country(standardize_race(filter_device_other(events)), lut))
 
 
 def build_fidelity_df(spark: SparkSession, json_glob: str, csv_path: str) -> DataFrame:
     """Assemble the full lazy plan (the analog of the reference's Beam
-    graph construction at src/pipeline.py:279-296)."""
+    graph construction at src/pipeline.py:270-296). Runs no Spark job."""
     events = read_jsonl_dicts(spark, json_glob, FAN_ENGAGEMENT_SCHEMA, keys_col=JSON_KEYS_COL)
-    return _transforms(events, read_country_dim(spark, csv_path))
+    return _transforms(events, country_lut(csv_path))
 
 
 def build_fidelity_stream(spark: SparkSession, json_glob: str, csv_path: str) -> DataFrame:
     """The same pipeline under Structured Streaming: a text file-source
-    stream through the identical transform chain (all narrow + a
-    stream-static broadcast join — legal in append mode with no
-    aggregation). One pipeline definition, two execution modes — the
+    stream through the identical transform chain (all narrow, legal in
+    append mode). One pipeline definition, two execution modes — the
     declarative-plan payoff the reference's DoFn chain can't offer."""
     from ..sources.jsonl import stream_jsonl_dicts
 
     events = stream_jsonl_dicts(spark, json_glob, FAN_ENGAGEMENT_SCHEMA, keys_col=JSON_KEYS_COL)
-    # Streaming plans reject monotonically_increasing_id even on the
-    # static join side — materialize the (tiny, by definition) dimension
-    # driver-side, the same eager-LUT shape the reference uses.
-    lazy_dim = read_country_dim(spark, csv_path)
-    country_dim = spark.createDataFrame(lazy_dim.collect(), lazy_dim.schema)
-    return _transforms(events, country_dim)
+    return _transforms(events, country_lut(csv_path))
 
 
 def write_jsonl(df: DataFrame, out_dir: str, single_shard: bool = True,

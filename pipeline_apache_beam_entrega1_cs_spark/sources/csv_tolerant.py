@@ -1,27 +1,24 @@
 """Tolerant CSV dimension-table source.
 
-Replicates the reference's ``build_country_lut`` reader semantics
-(reference src/pipeline.py:56-130) Spark-first:
+Builds the reference's country lookup (``build_country_lut``, reference
+src/pipeline.py:56-130) the way the reference does: a plain dict on the
+driver, read with Python's ``csv`` module. The fidelity pipeline applies it
+as a driver-built LUT through one literal lookup, so the whole ETL runs as
+one Spark job. Rules replicated:
 
-- delimiter sniffing over ``; , | \\t`` (reference :88-94) — stays
-  driver-side Python exactly as in the reference (it reads a 4 KiB sample);
-- UTF-8 BOM tolerated (Spark's CSV reader strips a BOM from the first
-  header cell; we additionally normalize it away);
+- delimiter sniffing over ``; , | \\t`` from a 4 KiB sample (reference
+  :88-94); UTF-8 BOM tolerated via ``utf-8-sig`` (reference :87);
 - header aliasing: each logical field accepts many spellings, matched
   after lowercasing and removing spaces/underscores/hyphens
-  (reference ``FIELD_ALIASES``/:67-80, ``_norm_header``/:82-83) — a
-  driver-side rename over ``df.columns``, no UDF;
+  (reference ``FIELD_ALIASES``/:67-80, ``_norm_header``/:82-83); an empty
+  value falls through to the next alias (reference get_value :98-107);
 - rows with empty country skipped (reference :111-112);
 - duplicate (normalized) country keys: LAST occurrence wins
-  (reference :123 ``lut[key] = payload``) — implemented with
-  ``max_by(payload, file_order)`` which is a single partial-aggregatable
-  shuffle, not a window sort;
+  (reference :123 ``lut[key] = payload``);
 - alias keys (usa/us/u.s./uk/uae) back-filled ONLY when the canonical
-  long name is already a key (reference :126-128) — the asymmetry that
-  produces the 28 fallback rows in the golden output.
-
-The dimension result is small by construction (a country table); callers
-broadcast it into the enrichment join.
+  long name is already a key, overriding a same-named row (reference
+  :126-128) — the asymmetry that produces the 28 fallback rows in the
+  golden output.
 """
 
 from __future__ import annotations
@@ -30,10 +27,12 @@ import csv
 import io
 import re
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.strings import COUNTRY_ALIAS, norm_country_key
+from ..functions.strings import COUNTRY_ALIAS
+from ..schemas import LOCATION_FIELDS, LOCATION_SCHEMA
 
 # Logical field -> accepted header spellings (reference src/pipeline.py:67-80).
 FIELD_ALIASES: dict[str, list[str]] = {
@@ -51,7 +50,7 @@ FIELD_ALIASES: dict[str, list[str]] = {
     ],
 }
 
-LOGICAL_FIELDS = list(FIELD_ALIASES)
+COUNTRY_DIM_SCHEMA = T.StructType([T.StructField("key", T.StringType()), *LOCATION_SCHEMA])
 
 
 def _norm_header(h: str) -> str:
@@ -71,67 +70,39 @@ def sniff_delimiter(csv_path: str) -> str:
         return ","
 
 
-def read_country_dim(spark: SparkSession, csv_path: str) -> DataFrame:
-    """Read the country CSV into a 6-column dimension DataFrame:
-    ``key`` (normalized join key) + the 5 payload fields of LocationData.
+def country_lut(csv_path: str) -> dict[str, dict[str, str]]:
+    """Read the country CSV into ``{normalized country -> LocationData
+    payload}`` (the 5 ``LOCATION_FIELDS``, stripped strings).
 
     Alias keys are back-filled canonical-only, so with the shipped CSV
-    (rows named "UK"/"USA") zero alias rows are added — faithfully
-    reproducing the reference's fallback behavior for UK/USA facts.
-    """
-    delim = sniff_delimiter(csv_path)
-    raw = (
-        spark.read.option("header", True)
-        .option("sep", delim)
-        .option("encoding", "UTF-8")
-        .csv(csv_path)
-    )
+    (rows named "UK"/"USA") zero alias keys are added — faithfully
+    reproducing the reference's fallback behavior for UK/USA facts."""
+    with io.open(csv_path, "r", encoding="utf-8-sig", newline="") as f:
+        rows = csv.reader(f, delimiter=sniff_delimiter(csv_path))
+        header = {_norm_header(h): i for i, h in enumerate(next(rows, []))}
+        columns = {
+            field: [header[a] for a in map(_norm_header, aliases) if a in header]
+            for field, aliases in FIELD_ALIASES.items()
+        }
+        lut: dict[str, dict[str, str]] = {}
+        for row in rows:
+            cells = [c.strip() for c in row]
+            payload = {
+                field: next((cells[i] for i in idx if i < len(cells) and cells[i]), "")
+                for field, idx in columns.items()
+            }
+            if payload["country"]:
+                lut[payload["country"].lower()] = payload
+    for alias, canonical in COUNTRY_ALIAS.items():
+        if canonical in lut:
+            lut[alias] = lut[canonical]
+    return lut
 
-    # Header aliasing: first matching spelling (in alias order) wins, and a
-    # non-empty value in an earlier alias column shadows later ones — the
-    # reference's get_value (:98-107) falls through empty values, which we
-    # reproduce with coalesce(nullif(trim(col), '')...).
-    header_map = {_norm_header(c): c for c in raw.columns}
 
-    def logical_col(field: str) -> F.Column:
-        candidates = []
-        for cand in FIELD_ALIASES[field]:
-            actual = header_map.get(_norm_header(cand))
-            if actual is not None:
-                candidates.append(F.nullif(F.trim(F.col(f"`{actual}`")), F.lit("")))
-        if not candidates:
-            return F.lit("")
-        return F.coalesce(*candidates, F.lit(""))
-
-    with_order = raw.withColumn("_file_order", F.monotonically_increasing_id())
-    dim = with_order.select(
-        *[logical_col(f).alias(f) for f in LOGICAL_FIELDS], "_file_order"
-    ).filter(F.col("country") != "")
-
-    # Last duplicate wins (reference :123): max_by over file order — a
-    # partial-aggregatable groupBy, no global sort.
-    payload = F.struct(*[F.col(f"`{f}`") for f in LOGICAL_FIELDS]).alias("payload")
-    deduped = (
-        dim.select(norm_country_key(F.col("country")).alias("key"), payload, "_file_order")
-        .groupBy("key")
-        .agg(F.max_by("payload", "_file_order").alias("payload"))
-    )
-
-    # Canonical-only alias back-fill (reference :126-128). The reference
-    # does ``lut[alias] = lut[canonical]`` — i.e. a back-filled alias key
-    # OVERWRITES a same-named CSV row — so we union with a priority column
-    # and keep the alias payload on conflict.
-    alias_rows = spark.createDataFrame(
-        [(a, c) for a, c in COUNTRY_ALIAS.items()], ["alias_key", "canonical_key"]
-    )
-    alias_backfill = (
-        deduped.join(alias_rows, deduped.key == alias_rows.canonical_key, "inner")
-        .select(F.col("alias_key").alias("key"), "payload", F.lit(1).alias("_prio"))
-    )
-    merged = (
-        deduped.withColumn("_prio", F.lit(0))
-        .unionByName(alias_backfill)
-        .groupBy("key")
-        .agg(F.max_by("payload", "_prio").alias("payload"))
-    )
-    return merged.select("key", "payload.*")
+def read_country_dim(spark: SparkSession, csv_path: str) -> DataFrame:
+    """The country LUT as a 6-column DataFrame: ``key`` (normalized
+    country) + the 5 payload fields of LocationData. Built from pandas so
+    that, with Arrow on, it is a local relation: no Python worker runs."""
+    rows = [(key, *(p[f] for f in LOCATION_FIELDS)) for key, p in country_lut(csv_path).items()]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=COUNTRY_DIM_SCHEMA.names),
+                                 COUNTRY_DIM_SCHEMA)

@@ -12,7 +12,7 @@ amortizes over batches. Writes STREAMING_AMORT_r16.json.
 
 Methodology matches bench.py: min-of-3, noop-equivalent end state (the
 runner materializes the final DF table), /proc/stat steal deltas per
-run, warmup pass at sf0.001.
+run, warmup pass at the sibling sf0.001 (else sf_dir itself).
 """
 from __future__ import annotations
 
@@ -39,8 +39,10 @@ def main() -> None:
     )
 
     spark = get_spark("streaming_amortization")
-    # warmup: JIT + codegen + streaming machinery
-    run_tfidf_state_stream(spark, "/root/testdata/sf0.001").count()
+    # warmup: JIT + codegen + streaming machinery, on the smallest sibling
+    # scale factor when there is one
+    warm_dir = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
+    run_tfidf_state_stream(spark, warm_dir if os.path.isdir(warm_dir) else sf_dir).count()
 
     batch_counts = [1, 4, 8]
     out: dict = {"sf_dir": sf_dir, "entry": "streaming_tfidf_state", "runs": {}}

@@ -87,6 +87,37 @@ def test_csv_bom_tolerated(spark, tmp_path):
     assert rows["bomland"].capital == "Bcity"
 
 
+def test_csv_doubled_quotes_unescaped(spark, tmp_path):
+    """RFC-4180 doubled quotes inside a quoted field unescape, as Python's
+    csv module (the reference's reader) reads them."""
+    from pipeline_apache_beam_entrega1_cs_spark.sources.csv_tolerant import read_country_dim
+
+    csv = (
+        "Country,Capital,Continent,Main_Official_Language,Currency\n"
+        'Quoteland,"The ""Big"" City",X,Y,Z\n'
+    )
+    path = write(tmp_path, "quotes.csv", csv)
+    rows = {r.key: r for r in read_country_dim(spark, path).collect()}
+    assert rows["quoteland"].capital == 'The "Big" City'
+
+
+def test_csv_header_only_gives_fallback_for_every_row(spark, tmp_path):
+    from pipeline_apache_beam_entrega1_cs_spark.fidelity.pipeline import enrich_with_country
+    from pipeline_apache_beam_entrega1_cs_spark.sources.csv_tolerant import (
+        country_lut,
+        read_country_dim,
+    )
+
+    path = write(tmp_path, "header_only.csv",
+                 "Country,Capital,Continent,Main_Official_Language,Currency\n")
+    lut = country_lut(path)
+    assert lut == {}
+    assert read_country_dim(spark, path).count() == 0
+    facts = spark.createDataFrame([(" Brazil ",), ("UK",), (None,)], "ViewerLocationCountry string")
+    got = sorted(tuple(r.LocationData) for r in enrich_with_country(facts, lut).collect())
+    assert got == [("", "", "", "", ""), ("Brazil", "", "", "", ""), ("UK", "", "", "", "")]
+
+
 def test_jsonl_dict_only_rule(spark, tmp_path):
     from pipeline_apache_beam_entrega1_cs_spark.sources.jsonl import read_jsonl_dicts
 
